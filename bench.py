@@ -102,41 +102,6 @@ def main() -> int:
     ):
         load_table(spark, sf_dir, t).count()
 
-    # Optional JIT pre-warm (the round-7 cold-drift experiment,
-    # SPARK_GRAFT_BENCH_PREWARM=1): execute a representative-shape query
-    # set ON TINY DATA (sf0.001) before the timed cold pass, so the
-    # janino compiler, codegen runtime classes, hash-aggregate/SMJ/window
-    # interpreter loops and the Arrow python-runner path are all
-    # JIT-compiled before the first measured query. Whole-stage-codegen
-    # classes are per-plan and can't be shared, but the compiler and
-    # runtime NOT being interpreted anymore is the hypothesis under test.
-    # Measured A/B lives in BASELINE.md's round-7 section.
-    if os.environ.get("SPARK_GRAFT_BENCH_PREWARM", "0") == "1":
-        prewarm_dir = os.environ.get(
-            "SPARK_GRAFT_PREWARM_SF_DIR", "/root/testdata/sf0.001"
-        )
-        prewarm = [
-            "q_group_agg", "q_window_rank", "q_merge_fullouter",
-            "q_dedup_fuzzy", "q_dedup_minhash", "q_similarity_topk",
-            "q_text_stats", "q_json_extract", "q_udf_normalize",
-            "q_pagerank", "q_sessionize", "q_pivot",
-        ]
-        t0 = time.time()
-        for name in prewarm:
-            if name in QUERIES:
-                try:
-                    QUERIES[name](spark, prewarm_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                except Exception as e:  # noqa: BLE001
-                    print(f"prewarm error in {name}: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
-        print(
-            f"prewarm: {len(prewarm)} shapes at {prewarm_dir} in "
-            f"{time.time() - t0:.1f}s",
-            file=sys.stderr,
-        )
-
     timings: dict[str, float] = {}
     for name, fn in QUERIES.items():
         t0 = time.time()

@@ -98,13 +98,13 @@ def _sql_md5_int(expr: str, nchars: int) -> str:
 def _doc_shingles(docs: DataFrame) -> DataFrame:
     """doc_id + distinct word-3-shingle array + its size.
 
-    Round 13: the raw docs scan fans out to cluster width first
-    (fan_out_scan — host-gated, no-op on multi-split real inputs), so
-    shingling AND every downstream emission/kernel of the dedup family
-    parallelize instead of inheriting the test corpus's single-row-group
-    single task. Safe for every consumer: each aggregates exact integers
-    or computes row-local scores, so row placement cannot change a
-    result."""
+    The raw docs scan fans out to cluster width first (fan_out_scan —
+    engages iff the scan has fewer partitions than defaultParallelism,
+    so a no-op on multi-split real inputs), so shingling AND every
+    downstream emission/kernel of the dedup family parallelize instead
+    of inheriting the test corpus's single-row-group single task. Safe
+    for every consumer: each aggregates exact integers or computes
+    row-local scores, so row placement cannot change a result."""
     return fan_out_scan(docs).select(
         "doc_id",
         F.array_distinct(word_shingles(F.lower(F.col("text")), k=3)).alias("sh"),

@@ -251,8 +251,9 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     by gram text so the top-k is deterministic across engines."""
     docs = load_table(spark, sf_dir, "documents")
     grams = (
-        # round-13 host-gated scan fan-out: the gram expansion is the
-        # query's map-side cost and ran single-task at test scale
+        # scan fan-out (operators/fanout.py: engages iff the scan has
+        # fewer partitions than defaultParallelism): the gram expansion is
+        # the query's map-side cost and would run single-task at test scale
         fan_out_scan(docs).select(F.array_distinct(_grams_spark(_DECON_N)).alias("grams"))
         .select(F.explode("grams").alias("gram"))
     )

@@ -1,5 +1,5 @@
-"""Round-13 scan fan-out (operators/fanout.py): env semantics, the
-under-split gate, result identity, and the probe's bounded decision.
+"""Scan fan-out (operators/fanout.py): the plan rule, the env off switch,
+the under-split gate and result identity.
 
 The plan-shape consequences (round-robin exchange ahead of the dedup
 emissions) are pinned in test_plans.py alongside the r12 signature
@@ -7,26 +7,50 @@ fan-out pin this generalizes."""
 
 from __future__ import annotations
 
+import re
+
 from cdmx_airquality_etl_spark.operators import fanout as FO
 from cdmx_airquality_etl_spark.sources.parquet import load_table
+
+
+def _plan(df) -> str:
+    # expression and exchange ids differ between loads of the same table
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"#\d+L?|plan_id=\d+", "#", plan)
 
 
 def test_env_off_is_identity(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "0")
     docs = load_table(spark, sf_dir, "documents")
+    assert FO.scan_fanout_parallelism(spark) == 0
     assert FO.fan_out_scan(docs) is docs
 
 
-def test_env_force_engages_and_under_split_gates(spark, sf_dir, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "1")
-    docs = load_table(spark, sf_dir, "documents")
+def test_rule_fans_under_split_scan_to_default_parallelism(
+    spark, sf_dir, monkeypatch
+):
+    # the rule depends only on the scan's split count and the session
+    # config: engaged at cluster width, and the same plan on every call
+    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT", raising=False)
     dp = spark.sparkContext.defaultParallelism
+    assert dp > 1
+    assert FO.scan_fanout_parallelism(spark) == dp
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() < dp  # single-row-group test file
     fanned = FO.fan_out_scan(docs)
-    assert fanned is not docs
+    again = FO.fan_out_scan(load_table(spark, sf_dir, "documents"))
+    # compared before either runs: execution finalizes the AQE plan string
+    assert "RoundRobinPartitioning" in _plan(fanned)
+    assert _plan(fanned) == _plan(again)
     assert fanned.rdd.getNumPartitions() == dp
-    # an input already at/above cluster width is left alone — the 100 TB
-    # no-op property (real scans split past defaultParallelism)
-    wide = docs.repartition(dp)
+
+
+def test_already_wide_input_is_left_alone(spark, sf_dir, monkeypatch):
+    # an input at/above cluster width gets nothing inserted — the
+    # large-table no-op property (real scans split past defaultParallelism)
+    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT", raising=False)
+    docs = load_table(spark, sf_dir, "documents")
+    wide = docs.repartition(spark.sparkContext.defaultParallelism)
     assert FO.fan_out_scan(wide) is wide
 
 
@@ -36,24 +60,14 @@ def test_results_identical_with_and_without_fanout(spark, sf_dir, monkeypatch):
     # bit-for-bit whichever shape runs
     from cdmx_airquality_etl_spark import QUERIES
 
-    rows = {}
-    for mode in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", mode)
-        rows[mode] = sorted(
+    def rows():
+        return sorted(
             map(tuple, QUERIES["q_dedup_fuzzy"](spark, sf_dir).collect())
         )
-    assert rows["0"] == rows["1"]
-    assert rows["0"]  # non-vacuous: sf0.001 has fuzzy pairs
 
-
-def test_probe_decision_is_bounded_and_cached(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT", raising=False)
-    FO._PROBE_CACHE.clear()
-    try:
-        n = FO.scan_fanout_parallelism(spark)
-        dp = spark.sparkContext.defaultParallelism
-        assert n in (0, dp)  # engage fully or not at all — never a tuned N
-        assert len(FO._PROBE_CACHE) == 1
-        assert FO.scan_fanout_parallelism(spark) == n  # cached, no re-probe
-    finally:
-        FO._PROBE_CACHE.clear()
+    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "0")
+    off = rows()
+    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT")
+    on = rows()
+    assert off == on
+    assert off  # non-vacuous: sf0.001 has fuzzy pairs

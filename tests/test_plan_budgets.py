@@ -64,10 +64,12 @@ def test_dieted_query_stays_within_exchange_budget(spark, name, budget):
         .executedPlan()
         .toString()
     )
-    # Round 13: round-robin exchanges are excluded from the count — the
-    # host-gated scan fan-out (operators/fanout.py, forced ON by conftest)
-    # inserts one per REFERENCE to the fanned scan in the static plan
-    # (AQE collapses the identical copies to ReusedExchange at runtime),
+    # Round-robin exchanges are excluded from the count — the scan
+    # fan-out (operators/fanout.py: engages iff the scan has fewer
+    # partitions than defaultParallelism, always so for the suite's
+    # single-row-group files at local[4]) inserts one per REFERENCE to
+    # the fanned scan in the static plan (AQE collapses the identical
+    # copies to ReusedExchange at runtime),
     # and the regression class this gate pins is subtree RE-DERIVATION,
     # which always shows up as extra hash/range exchanges, never as
     # keyless repartitions.

@@ -293,8 +293,8 @@ def test_signature_kernels_fan_out_before_band_join(spark, sf_dir):
 def test_no_single_partition_python_kernel_feeds_wide_input(spark, sf_dir):
     """Round-13 generalization of the r12 cliff guard: every mapInPandas
     kernel whose input is a raw (single-row-group) scan must sit above a
-    fan-out — under SPARK_GRAFT_SCAN_FANOUT=1 (the suite default) its
-    plan carries a RoundRobinPartitioning below the MapInPandas node.
+    fan-out — the scan has fewer partitions than defaultParallelism, so
+    its plan carries a RoundRobinPartitioning below the MapInPandas node.
     Covers the resampling kernel with a scan-grain input; the
     q_permutation_test / q_fdr_screen kernels read post-aggregate frames
     (already behind an exchange) and are exempt by the same rule."""
